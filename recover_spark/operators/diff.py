@@ -19,6 +19,26 @@ ONE full-outer join on the index keys produces everything:
 
 Duplicate-key detection and column set ops stay driver-light: column set
 ops use ``df.columns`` (metadata only), duplicates are one groupBy.
+
+Each of ``left_only``/``right_only``/``mismatched`` is its own plan over
+the join: counting all three runs the join three times.  A caller that
+reads several of them repeatedly can pin ``joined`` first.
+
+Why SQL text
+------------
+Every derived frame is built from a handful of ``selectExpr``/``where``
+calls over backtick-quoted identifiers, not from Python ``Column``
+chains.  A Column chain costs a py4j round trip per node (``col``,
+``alias``, ``<=>``, ``NOT``, ``OR``, ``struct``, ``count``, ``sum``),
+some 300-400 per compared column, and the weekly diff compares 30-61
+columns: building the frames, not running them, was most of the diff's
+wall time.  An expression string crosses as one value and is parsed in
+the JVM, so a frame costs about one round trip per column.  The
+optimized plans are the Column-built ones: OR chains are parenthesised
+left-deep, as a Column fold builds them (the parser would balance an
+unparenthesised chain).  ``column_stats`` builds its rows with
+``named_struct`` where the Column form used ``struct``; the rows are the
+same, the plan text is not.
 """
 
 from __future__ import annotations
@@ -33,8 +53,33 @@ from pyspark.sql import types as T
 _L, _R = "__present_l", "__present_r"
 
 
-def _is_numeric(dt: T.DataType) -> bool:
-    return isinstance(dt, T.NumericType)
+def _quote(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _string(value: str) -> str:
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _double(value: float) -> str:
+    return f"{float(value)!r}D"
+
+
+def _any_of(terms: Sequence[str]) -> str:
+    """SQL text true when any of the SQL ``terms`` is, ORed left-deep."""
+    if not terms:
+        return "false"
+    out = terms[0]
+    for t in terms[1:]:
+        out = f"({out} OR {t})"
+    return out
+
+
+def differs(pairs: Sequence[tuple[str, str]]) -> str:
+    """SQL text true when any ``(a, b)`` column pair differs, null-safe:
+    NULL vs NULL is equal, NULL vs a value differs."""
+    return _any_of([f"NOT ({_quote(a)} <=> {_quote(b)})" for a, b in pairs])
 
 
 @dataclass
@@ -56,9 +101,21 @@ class CompareResult:
 def duplicate_index_rows(df: DataFrame, index_cols: Sequence[str]) -> DataFrame:
     """A4 — keys appearing more than once (compare_parquet_datasets.py:488-507)."""
     return (
-        df.groupBy(*index_cols)
+        df.groupBy(*[_quote(k) for k in index_cols])
         .agg(F.count(F.lit(1)).alias("n_rows"))
         .filter(F.col("n_rows") > 1)
+    )
+
+
+def _match(l: str, r: str, tolerant: bool, abs_tol: float, rel_tol: float) -> str:
+    if not tolerant:
+        return f"{l} <=> {r}"
+    # datacompy's rule: a NULL on exactly one side is a mismatch, so the
+    # comparison's NULL must become false, not stay NULL (NOT NULL would
+    # drop the row from ``mismatched``).
+    return (
+        f"coalesce(abs({l} - {r}) <= {_double(abs_tol)} + {_double(rel_tol)}"
+        f" * abs({r}), false) OR ({l} IS NULL AND {r} IS NULL)"
     )
 
 
@@ -72,84 +129,71 @@ def compare_datasets(
     """Full-outer diff of two datasets on composite ``index_cols``.
 
     Numeric columns match when ``abs(l - r) <= abs_tol + rel_tol*abs(r)``
-    (datacompy's tolerance rule); all other types use null-safe equality.
+    (datacompy's tolerance rule; a NULL on one side only never matches);
+    all other types use null-safe equality.
     Columns outside the intersection are reported, not compared
     (compare_parquet_datasets.py:154-182).
     """
     keys = list(index_cols)
-    lcols, rcols = set(left.columns), set(right.columns)
-    common = [c for c in left.columns if c in rcols and c not in keys]
-    left_only_cols = sorted(lcols - rcols)
-    right_only_cols = sorted(rcols - lcols)
-    ltypes = dict(left.dtypes)
-    lschema = {f.name: f.dataType for f in left.schema.fields}
+    lschema = left.schema
+    rcols = set(right.columns)
+    common = [c for c in lschema.names if c in rcols and c not in keys]
+    left_only_cols = sorted(set(lschema.names) - rcols)
+    right_only_cols = sorted(rcols - set(lschema.names))
+    numeric = {f.name for f in lschema.fields if isinstance(f.dataType, T.NumericType)}
+    qkeys = [_quote(k) for k in keys]
+    ql = {c: _quote(f"{c}__l") for c in common}
+    qr = {c: _quote(f"{c}__r") for c in common}
+    qm = {c: _quote(f"{c}__match") for c in common}
 
-    lsel = left.select(
-        *keys, *[F.col(c).alias(f"{c}__l") for c in common], F.lit(True).alias(_L)
+    lsel = left.selectExpr(
+        *qkeys, *[f"{_quote(c)} AS {ql[c]}" for c in common], f"true AS {_L}"
     )
-    rsel = right.select(
-        *keys, *[F.col(c).alias(f"{c}__r") for c in common], F.lit(True).alias(_R)
+    rsel = right.selectExpr(
+        *qkeys, *[f"{_quote(c)} AS {qr[c]}" for c in common], f"true AS {_R}"
     )
-    joined = lsel.join(rsel, on=keys, how="full_outer")
+    tolerant = bool(abs_tol or rel_tol)
+    joined = lsel.join(rsel, on=keys, how="full_outer").selectExpr(
+        "*",
+        *[
+            _match(ql[c], qr[c], tolerant and c in numeric, abs_tol, rel_tol)
+            + f" AS {qm[c]}"
+            for c in common
+        ],
+    )
 
-    match_cols = []
-    for c in common:
-        l, r = F.col(f"{c}__l"), F.col(f"{c}__r")
-        if _is_numeric(lschema[c]) and (abs_tol or rel_tol):
-            eq = (F.abs(l - r) <= F.lit(abs_tol) + F.lit(rel_tol) * F.abs(r)) | (
-                l.isNull() & r.isNull()
-            )
-        else:
-            eq = l.eqNullSafe(r)
-        match_cols.append(eq.alias(f"{c}__match"))
-    joined = joined.select("*", *match_cols)
-
-    both = joined.filter(F.col(_L).isNotNull() & F.col(_R).isNotNull())
-    left_only = joined.filter(F.col(_R).isNull()).select(
-        *keys, *[F.col(f"{c}__l").alias(c) for c in common]
+    both = joined.where(f"{_L} IS NOT NULL AND {_R} IS NOT NULL")
+    left_only = joined.where(f"{_R} IS NULL").selectExpr(
+        *qkeys, *[f"{ql[c]} AS {_quote(c)}" for c in common]
     )
-    right_only = joined.filter(F.col(_L).isNull()).select(
-        *keys, *[F.col(f"{c}__r").alias(c) for c in common]
+    right_only = joined.where(f"{_L} IS NULL").selectExpr(
+        *qkeys, *[f"{qr[c]} AS {_quote(c)}" for c in common]
     )
-    if common:
-        any_mismatch = None
-        for c in common:
-            m = ~F.col(f"{c}__match")
-            any_mismatch = m if any_mismatch is None else (any_mismatch | m)
-        mismatched = both.filter(any_mismatch)
-    else:
-        mismatched = both.limit(0)
+    mismatched = both.where(_any_of([f"NOT {qm[c]}" for c in common]))
 
     # Per-column stats in ONE aggregation (map-side partial -> tiny
     # result), kept LAZY: the single agg row is unpivoted with explode,
     # so callers that never read column_stats pay nothing.
     if common:
+        n = {c: _quote(f"{c}__n") for c in common}
+        eq = {c: _quote(f"{c}__eq") for c in common}
         aggs = []
         for c in common:
-            aggs.append(F.count(F.lit(1)).alias(f"{c}__n"))
-            aggs.append(
-                F.sum(F.col(f"{c}__match").cast("long")).alias(f"{c}__eq")
-            )
-        per_col = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("column"),
-                    F.col(f"{c}__n").alias("rows_compared"),
-                    F.coalesce(F.col(f"{c}__eq"), F.lit(0)).alias("rows_equal"),
-                )
-                for c in common
-            ]
+            aggs.append(f"count(1) AS {n[c]}")
+            aggs.append(f"sum(CAST({qm[c]} AS BIGINT)) AS {eq[c]}")
+        per_col = ", ".join(
+            f"named_struct('column', {_string(c)}, 'rows_compared', {n[c]},"
+            f" 'rows_equal', coalesce({eq[c]}, 0))"
+            for c in common
         )
         column_stats = (
-            both.agg(*aggs)
-            .select(F.explode(per_col).alias("s"))
-            .select(
-                F.col("s.column").alias("column"),
-                F.col("s.rows_compared").cast("long").alias("rows_compared"),
-                F.col("s.rows_equal").cast("long").alias("rows_equal"),
-                (F.col("s.rows_compared") - F.col("s.rows_equal"))
-                .cast("long")
-                .alias("rows_unequal"),
+            both.selectExpr(*aggs)
+            .selectExpr(f"explode(array({per_col})) AS s")
+            .selectExpr(
+                "s.`column` AS `column`",
+                "CAST(s.rows_compared AS BIGINT) AS rows_compared",
+                "CAST(s.rows_equal AS BIGINT) AS rows_equal",
+                "CAST(s.rows_compared - s.rows_equal AS BIGINT) AS rows_unequal",
             )
         )
     else:

@@ -254,6 +254,8 @@ def generation_changes(
     """
     from pyspark.sql import functions as F
 
+    from recover_spark.operators.diff import differs
+
     gens = list_generations(path)
     live = current_generation(path)
     if to_generation is None:
@@ -284,13 +286,10 @@ def generation_changes(
         c = n[k] == o[f"__ok_{k}"]
         cond = c if cond is None else cond & c
     j = n.join(o, cond, "full_outer")
-    differs = F.lit(False)
-    for c in shared:
-        differs = differs | ~n[c].eqNullSafe(o[f"__o_{c}"])
     change = (
         F.when(o["__in_old"].isNull(), F.lit("insert"))
         .when(n["__in_new"].isNull(), F.lit("delete"))
-        .when(differs, F.lit("update"))
+        .when(F.expr(differs([(c, f"__o_{c}") for c in shared])), F.lit("update"))
     )
     out_keys = [
         F.coalesce(n[k], o[f"__ok_{k}"]).alias(k) for k in keys
